@@ -67,13 +67,6 @@ object Tables {
     else df
   }
 
-  /** `df.limit(n).collect()` as ONE full-parallelism job. Plain
-    * limit+collect runs CollectLimitExec's incremental partition probing
-    * (1, then 4x, ...) — several sequential rounds when the limit is a
-    * driver-size CAP that the whole input fits under, which is the
-    * adaptive-collect pattern (DagClosure, resolveGeneIds). Scoped conf
-    * override, restored after the job.
-    */
   /** Collapse a DIM-SIZED frame to a LOCAL relation when it fits the
     * driver (r17): plans that embed derived dimension subtrees at many
     * places (the annotate spine joins dims ~10 times, three species per
@@ -81,16 +74,31 @@ object Tables {
     * embedding; a LocalRelation leaf is free to analyze and broadcasts
     * without a job. Content identical. Past `cap` rows the lazy plan is
     * returned unchanged — the same adaptive split DagClosure and the
-    * resolve fixpoint use. Only for dimension tables: a fact frame
-    * localized here would ship the corpus through the driver.
+    * resolve fixpoint use — and so is a frame whose collected rows
+    * estimate past [[LocalizeMaxBytes]] on the driver heap: a few wide
+    * rows under the row cap must not pin hundreds of MB in a memoized
+    * plan. Only for dimension tables: a fact frame localized here would
+    * ship the corpus through the driver.
     */
   def localizeBounded(df: DataFrame, cap: Int = 1000000): DataFrame = {
     val rows = limitCollect(df, cap + 1)
-    if (rows.length > cap) df
+    if (rows.length > cap ||
+        org.apache.spark.util.SizeEstimator.estimate(rows) > LocalizeMaxBytes)
+      df
     else df.sparkSession.createDataFrame(
       java.util.Arrays.asList(rows: _*), df.schema)
   }
 
+  /** Driver-heap byte bound of [[localizeBounded]] (64 MiB). */
+  private[graft] val LocalizeMaxBytes: Long = 64L << 20
+
+  /** `df.limit(n).collect()` as ONE full-parallelism job. Plain
+    * limit+collect runs CollectLimitExec's incremental partition probing
+    * (1, then 4x, ...) — several sequential rounds when the limit is a
+    * driver-size CAP that the whole input fits under, which is the
+    * adaptive-collect pattern (DagClosure, resolveGeneIds). Scoped conf
+    * override, restored after the job.
+    */
   def limitCollect(df: DataFrame, n: Int): Array[org.apache.spark.sql.Row] = {
     val spark = df.sparkSession
     // serialized per session: concurrent set/restore of the conf key

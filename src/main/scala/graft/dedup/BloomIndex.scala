@@ -34,6 +34,8 @@ import graft.text.TextAnalysis
   */
 object BloomIndex {
 
+  private val indexIds = new java.util.concurrent.atomic.AtomicLong()
+
   /** The two filters plus the banding geometry they were built with
     * (classification must probe with identical band keys). Serializable
     * — broadcast-friendly — and [[BloomIndexIO]] persists the whole
@@ -45,11 +47,18 @@ object BloomIndex {
     * a Bloom filter cannot grow, so once `inserted` passes the budget
     * the real fpp silently degrades past the requested one — [[fold]]
     * guards that loudly instead.
+    *
+    * `id` is unique per constructed Index in this JVM (every build,
+    * [[fold]], `copy` and load draws a fresh one) and keys memos that
+    * depend on the filter bits. It is a body field, so equality and
+    * `copy` see only the constructor fields.
     */
   final case class Index(fp: BloomFilter, band: BloomFilter,
                          k: Int, bands: Int,
                          expectedItems: Long, inserted: Long)
-      extends Serializable
+      extends Serializable {
+    val id: Long = indexIds.getAndIncrement()
+  }
 
   /** Fold `df`'s exact fingerprints and LSH band keys into Bloom
     * filters. `expectedItems` is the DOCUMENT count: the fp filter

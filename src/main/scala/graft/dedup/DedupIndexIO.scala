@@ -93,22 +93,25 @@ object DedupIndexIO {
     * [[Dedup.indexGeometry]] memo missed on all of them and each call
     * paid a 2-row probe job. Keyed like SemanticIndexIO.loadCache by
     * (session, dir) plus a freshness stamp over the marker partition's
-    * file statuses (mtime/len), which kills the delete-and-recreate-at-
-    * the-same-path stale-geometry hazard the bare (session, dir) key
-    * would have.
+    * files: their count and each file's (name, mtime, len), in name
+    * order. Spark part-file names carry a per-write UUID, so a store
+    * deleted and re-created at the same path gets a new stamp even when
+    * mtimes and lengths coincide — the stale-geometry hazard the bare
+    * (session, dir) key would have.
     */
   private val geomCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Long), (Int, Int)]()
+    (SparkSession, String, String), (Int, Int)]()
 
-  private def geomStamp(spark: SparkSession, dir: String): Long = {
+  private def geomStamp(spark: SparkSession, dir: String): String = {
     val p = new org.apache.hadoop.fs.Path(dir, "kind=geom")
     try {
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.listStatus(p).iterator
+      val files = fs.listStatus(p)
         .filterNot(_.getPath.getName.startsWith("_"))
-        .map(s => s.getModificationTime ^ (s.getLen * 1315423911L))
-        .foldLeft(0L)(_ ^ _)
-    } catch { case _: java.io.IOException => -1L }
+        .sortBy(_.getPath.getName)
+      files.map(s => s"${s.getPath.getName}:${s.getModificationTime}:${s.getLen}")
+        .mkString(s"${files.length}|", "|", "")
+    } catch { case _: java.io.IOException => "" }
   }
 
   private def storedGeometry(spark: SparkSession, dir: String,

@@ -125,25 +125,8 @@ object AnnotationPipeline {
   def resolveFixpoint(dims: Dimensions, maxHops: Int = 20): DataFrame = {
     graft.Memo.maintain(fixpointCache)(_._1.sparkSession)
     fixpointCache.computeIfAbsent((dims.rgdIds, dims.history, maxHops),
-      _ => localizeBounded(buildFixpoint(dims, maxHops)))
+      _ => graft.Tables.localizeBounded(buildFixpoint(dims, maxHops)))
   }
-
-  /** Collapse a DIM-SIZED plan to a LOCAL relation when it fits the
-    * driver (r17, guide §1.2 "per-task work" / §2.4): the fixpoint walk
-    * composes `depth` chained broadcast joins, and every consumer —
-    * matchGenes embeds the resolve map in several tier builds, times
-    * three species per runner pass — re-planned and re-EXECUTED that
-    * chain to build its broadcast. The walk's result is a genome
-    * dimension (one row per known gene id), already driver-bounded by
-    * construction everywhere it is broadcast, so one collect per
-    * (session, dims) turns every downstream broadcast build into a
-    * job-free local-relation read. Content identical; past the cap the
-    * lazy plan is returned unchanged (the same adaptive split the walk
-    * itself uses).
-    */
-  private def localizeBounded(df: DataFrame,
-                              cap: Int = 1000000): DataFrame =
-    graft.Tables.localizeBounded(df, cap)
 
   private def buildFixpoint(dims: Dimensions, maxHops: Int): DataFrame = {
     val status = dims.rgdIds.filter(col("object_key") === GENES_OBJECT_KEY)
@@ -566,9 +549,9 @@ object AnnotationPipeline {
     * identity/audit columns the classify-merge fills, projected to the
     * target table's column order. Independent of the EXISTING table by
     * construction — every enrichment and filter reads `dims`, never the
-    * evolving annotation table — which is what lets
-    * [[PipelineRunner.runAll]] materialize every species' incoming side
-    * CONCURRENTLY before the (necessarily sequential) merges.
+    * evolving annotation table. [[run]] feeds it straight into
+    * [[MergeSink.merge]]; public so callers can build or time the
+    * incoming plan on its own (perfbench's plan-build probe does).
     */
   def incoming(gaf: DataFrame, dims: Dimensions, cfg: PipelineConfig,
                cols: Seq[String]): DataFrame = {

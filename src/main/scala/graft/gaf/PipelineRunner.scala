@@ -69,22 +69,10 @@ object PipelineRunner {
     * @param staleCutoff rows last modified before this are delete
     *                    candidates (run start − 10 min in the reference,
     *                    GoNonratAnnotationPipeline.java:98)
-    * @param concurrentIncoming materialize every species' incoming spine
-    *                    concurrently before the sequential merges.
-    *                    Default OFF — measured SLOWER on a shared-heap
-    *                    local deployment (see the phase comment below);
-    *                    intended for multi-executor clusters only.
-    *                    UNPROVEN-BENEFICIAL ANYWHERE as of r16: no
-    *                    environment has yet shown it winning (local[32]
-    *                    is ~2x slower; output parity is spec-pinned).
-    *                    MEASURE ON A REAL MULTI-EXECUTOR CLUSTER before
-    *                    enabling in a deployment — if your measurement
-    *                    also shows no win, leave it off.
     */
   def runAll(existing: DataFrame, dims: Dimensions, runs: Seq[SpeciesRun],
              isoRefRgdId: Int, staleCutoff: Timestamp,
-             thresholdPct: Double = DELETE_THRESHOLD_PCT,
-             concurrentIncoming: Boolean = false): RunReport = {
+             thresholdPct: Double = DELETE_THRESHOLD_PCT): RunReport = {
     // ---- fused scoped-count machinery (r16 optimization round).
     //
     // The loop below used to pay, PER SPECIES, six driver actions over
@@ -154,86 +142,6 @@ object PipelineRunner {
     // iteration releases the previous species' blocks deterministically —
     // no table-sized storage accumulates across harness invocations.
 
-    // OPT-IN concurrent incoming phase (r14): each species' incoming
-    // side — the full annotate spine — reads only its GAF and `dims`,
-    // never the evolving table (chinchilla's GAF is built from the
-    // TIME-ZERO table by the §3.3 contract), so the spines are
-    // data-independent until the merge and CAN be materialized
-    // concurrently, with the merges sequential below as joins of two
-    // materialized leaves. Output is bit-identical either way (digest
-    // pin green over both paths). Default is OFF because the A/B was
-    // MEASURED AGAINST it in this environment: on local[32] with one
-    // shared 8 GiB heap the harness row read 33s sequential-fused vs
-    // 67-72s concurrent (warm 47s vs 133s) — three co-resident incoming
-    // snapshots plus tripled aggregation state thrash storage/GC, and
-    // the separate incoming materialization pays a full extra
-    // write+read pass that the fused AnnotationPipeline.run never does
-    // (BASELINE.md r14). The knob exists for MULTI-EXECUTOR clusters,
-    // where the fills do not share one heap and one spine's barrier
-    // stalls would otherwise idle executors another spine could use —
-    // measure there before enabling; the failure path (one fill throws
-    // -> every sibling fill released) is spec-pinned either way.
-    //
-    // Plan BUILDING stays serial even when enabled (annotate's
-    // autoShuffle raises the session's AQE initial-partition floor
-    // monotonically, so by launch time the conf holds the max across
-    // spines); only the FILLS run concurrently — standard
-    // multi-threaded job submission, execution ids are thread-local.
-    val cols = existing.columns.toSeq
-    val incomingSnaps: Option[Seq[Snapshot.Snapped]] =
-      if (!concurrentIncoming || runs.size <= 1) None
-      else Some(timed("incoming_fill_concurrent") {
-        val incomingFrames = runs.map(r =>
-          AnnotationPipeline.incoming(r.gaf, dims, r.cfg, cols))
-        val pool = java.util.concurrent.Executors
-          .newFixedThreadPool(runs.size)
-        try {
-          // individual submits, not invokeAll: an InterruptedException
-          // from invokeAll discards the futures list, so fills that had
-          // ALREADY completed could never be drained — their persisted
-          // blocks would leak for the rest of the session (r14 advice;
-          // incomingSnaps is never assigned on this path, so the outer
-          // releaseIncoming cleanup cannot see them either)
-          val futures = incomingFrames.map { f =>
-            pool.submit((() => Snapshot.materialize(f)):
-              java.util.concurrent.Callable[Snapshot.Snapped])
-          }
-          val results =
-            try futures.map(f =>
-              try Right(f.get())
-              catch { case e: java.util.concurrent.ExecutionException =>
-                Left(e.getCause) })
-            catch { case ie: InterruptedException =>
-              // calling thread interrupted mid-await: cancel what
-              // hasn't run, give in-flight fills a bounded window to
-              // settle, release every fill that completed, rethrow
-              pool.shutdownNow()
-              try pool.awaitTermination(30,
-                java.util.concurrent.TimeUnit.SECONDS)
-              catch { case _: InterruptedException => () }
-              futures.foreach { f =>
-                if (f.isDone && !f.isCancelled)
-                  try f.get().release() catch { case _: Throwable => () }
-              }
-              throw ie
-            }
-          // surface the FIRST failure after all settle; release any
-          // fills that did succeed (nothing else can free them)
-          if (results.exists(_.isLeft)) {
-            results.foreach {
-              case Right(s) => s.release()
-              case Left(_) => ()
-            }
-            throw results.collectFirst { case Left(e) => e }.get
-          }
-          results.map(_.toOption.get)
-        } finally pool.shutdown()
-      })
-    val incReleased = Array.fill(runs.size)(false)
-    def releaseIncoming(i: Int): Unit = incomingSnaps.foreach { snaps =>
-      if (!incReleased(i)) { incReleased(i) = true; snaps(i).release() }
-    }
-
     var table = existing
     var prevRelease: Option[() => Unit] = None
     // forward-looking values observed during the previous species' fill;
@@ -260,18 +168,12 @@ object PipelineRunner {
         // the next one's initial, and U5's on the last species) rides
         // the SAME fill pass as observed aggregates over broadcast
         // scope markers — the full-outer join never re-executes and the
-        // stored result is re-read only by the delete anti-joins.
-        // Sequential default: the FUSED annotate+merge plan (one pass —
-        // no separate incoming materialization); opt-in concurrent
-        // mode merges the pre-filled incoming leaf instead.
-        val mergeFrame = timed(s"${r.name}_plan_build")(incomingSnaps match {
-          case Some(snaps) => MergeSink.merge(
-            table, snaps(i).df, r.cfg.runTs, r.cfg.createdBy,
-            assignKeys = true, maxKeyOpt = maxKeyCarry)
-          case None =>
-            AnnotationPipeline.run(r.gaf, table, dims, r.cfg,
-              maxKeyOpt = maxKeyCarry)
-        })
+        // stored result is re-read only by the delete anti-joins. The
+        // plan is the FUSED annotate+merge (one pass — no separate
+        // incoming materialization).
+        val mergeFrame = timed(s"${r.name}_plan_build")(
+          AnnotationPipeline.run(r.gaf, table, dims, r.cfg,
+            maxKeyOpt = maxKeyCarry))
         // one marker per DISTINCT species scope this fill must count
         val marks = scala.collection.mutable.LinkedHashMap.empty[Int, String]
         def marker(speciesTypeKey: Int): String =
@@ -301,9 +203,6 @@ object PipelineRunner {
           .drop(marks.values.toSeq: _*)
         val mergedSnap = timed(s"${r.name}_merge_fill")(
           Snapshot.materialize(observed))
-        // the merge result is stored — this species' incoming blocks
-        // are dead from here
-        releaseIncoming(i)
         var mergedAdopted = false // did mergedSnap become `table`'s storage?
         try {
           val row = obs.get
@@ -375,7 +274,6 @@ object PipelineRunner {
       RunReport(perSpecies, Some(isoReport), afterIso,
         prevRelease.getOrElse(() => ()))
     } catch { case e: Throwable =>
-      runs.indices.foreach(releaseIncoming)
       prevRelease.foreach(_())
       throw e
     }

@@ -355,14 +355,15 @@ object Curate {
     // filters, so persistedManifest's canonicalized-OUTPUT key could
     // never hit; the r17 INPUT-keyed stagedManifest restores the
     // intended cross-invocation reuse the exact form always had — key =
-    // the increment's plan + the index OBJECT (identity: the index is
-    // itself a session-scoped fixture, and a rebuilt index is a new
-    // object, so a stale hit is impossible) + geometry. A fresh leaf
+    // the increment's plan + the index's unique `id` (every build, fold
+    // or load mints a new one, so a rebuilt index never serves another
+    // index's manifest — an identity hash could be reused once the old
+    // index is collected) + geometry. A fresh leaf
     // per call also made every DOWNSTREAM manifest (keeper ids, gates)
     // miss per call, which is what kept this row ~10x the exact form's
     // steady state.
     val fresh = stagedManifest(newDocs,
-        s"bloomclassify|${System.identityHashCode(historyIndex)}|" +
+        s"bloomclassify|${historyIndex.id}|" +
           s"$textCol|${historyIndex.k}|${historyIndex.bands}") {
       graft.dedup.BloomIndex.classify(newDocs, historyIndex, textCol)
         .filter(col("status") === "kept").drop("status")

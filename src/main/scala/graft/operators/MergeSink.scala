@@ -54,8 +54,16 @@ object MergeSink {
     * `incoming` must carry every `existing` column except
     * `full_annot_key`, `created_date`, `last_modified_date`,
     * `created_by`, `last_modified_by`.
-    */
-  /** @param assignKeys pass false ONLY for audit passes that never use
+    *
+    * Insert surrogate keys: with `nB = 1024` hash buckets and `R` the
+    * largest number of inserts landing in one bucket, insert keys fall
+    * in `(maxKey, maxKey + nB * R]`, where `maxKey` is the existing
+    * table's largest key. They are unique and above every existing key,
+    * but NOT dense: a run inserting n rows advances the table's max key
+    * by up to `nB * R >= n` (up to 1024 even for a single insert),
+    * leaving gaps that later runs never fill.
+    *
+    * @param assignKeys pass false ONLY for audit passes that never use
     *                    insert rows' surrogate keys (insert keys stay
     *                    NULL): skips the per-bucket row_number window
     *                    sort AND the maxKey driver action. All persisted

@@ -1392,6 +1392,71 @@ class ExtensionsSpec extends SparkSpec {
     } finally Tables.deleteTree(tmp)
   }
 
+  test("Bloom indexes get unique ids; the classify manifest is keyed " +
+      "on the id, so re-using an index hits and a rebuilt one misses") {
+    import graft.dedup.BloomIndex
+    import graft.operators.Curate
+    val docs = Tables.documents(spark, sf)
+    val hist = docs.filter(pmod($"doc_id", lit(3)) =!= 0)
+    val batch = docs.filter(pmod($"doc_id", lit(3)) === 0)
+    val bench = docs.filter(pmod($"doc_id", lit(50)) === 0)
+    val cfg = Curate.CurateConfig(contaminationN = 3,
+      maxContaminationFrac = 0.06)
+    def build() = BloomIndex.build(hist, "text", expectedItems = 10000,
+      k = cfg.minhashK, bands = cfg.bands)
+    val a = build()
+    val b = build()
+    assert(a === b, "id is a body field: equality sees only the filters")
+    assert(a.id !== b.id)
+    assert(a.copy().id !== a.id)
+    def pinned = spark.sparkContext.getPersistentRDDs.size
+    Curate.clearManifests()
+    try {
+      val before = pinned
+      Curate.curateIncrementBloom(batch, bench, a, "doc_id", "text", cfg)
+      val afterFirst = pinned
+      assert(afterFirst > before)
+      Curate.curateIncrementBloom(batch, bench, a, "doc_id", "text", cfg)
+      assert(pinned === afterFirst, "the same index must hit the manifest")
+      Curate.curateIncrementBloom(batch, bench, b, "doc_id", "text", cfg)
+      assert(pinned > afterFirst, "an equal rebuilt index must miss")
+    } finally Curate.clearManifests()
+  }
+
+  test("exact-keys store: a store deleted and re-saved at the same " +
+      "path with a new geometry loads the new geometry, even when the " +
+      "marker files keep the old mtimes") {
+    val docs = Tables.documents(spark, sf).limit(30)
+      .select($"doc_id", $"text")
+    val tmp = java.nio.file.Files.createTempDirectory("graft_keyio_stamp")
+    val d = tmp.resolve("idx").toUri.toString
+    val marker = new org.apache.hadoop.fs.Path(d, "kind=geom")
+    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def markerFiles = fs.listStatus(marker)
+      .filterNot(_.getPath.getName.startsWith("_"))
+      .sortBy(_.getPath.getName)
+    try {
+      graft.dedup.DedupIndexIO.save(
+        Dedup.dedupIndex(docs, "doc_id", "text", k = 16, bands = 2), d)
+      def geometry = {
+        val st = graft.dedup.DedupIndexIO.stats(spark, d)
+        (st.k, st.bands)
+      }
+      assert(geometry === ((16, 2)))
+      val oldTimes = markerFiles.map(_.getModificationTime)
+      Tables.deleteTree(tmp.resolve("idx"))
+      graft.dedup.DedupIndexIO.save(
+        Dedup.dedupIndex(docs, "doc_id", "text", k = 16, bands = 4), d)
+      // same file count and marker width; force the old mtimes back so
+      // only the part-file names tell the two stores apart
+      val fresh = markerFiles
+      assert(fresh.length === oldTimes.length)
+      fresh.zip(oldTimes).foreach { case (f, t) =>
+        fs.setTimes(f.getPath, t, -1L) }
+      assert(geometry === ((16, 4)))
+    } finally Tables.deleteTree(tmp)
+  }
+
   test("hashed embeddings: unit norm, token-set identity, zero on empty") {
     val df = Seq(
       (1L, "alpha beta gamma delta"),

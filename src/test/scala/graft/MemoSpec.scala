@@ -38,6 +38,23 @@ class MemoSpec extends AnyFunSuite {
     assert(big.isEmpty, "an over-cap cache clears wholesale")
   }
 
+  test("localizeBounded localizes a small frame but returns a frame of " +
+      "a few wide rows past the byte bound as the lazy plan") {
+    val spark = SparkSpec.session()
+    import spark.implicits._
+    val small = Seq((1, "a"), (2, "b")).toDF("id", "s")
+    val local = Tables.localizeBounded(small)
+    assert(local.queryExecution.analyzed
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    assert(local.as[(Int, String)].collect().toSet === Set((1, "a"), (2, "b")))
+    // 4 rows, far under the row cap, whose collected strings estimate
+    // past LocalizeMaxBytes on the driver heap
+    val rowBytes = (Tables.LocalizeMaxBytes / 3).toInt
+    val wide = spark.range(4).select($"id",
+      org.apache.spark.sql.functions.expr(s"repeat('x', $rowBytes)").as("s"))
+    assert(Tables.localizeBounded(wide) eq wide)
+  }
+
   test("maintain evicts entries whose owning session has stopped") {
     // stops the JVM's active session (a SparkContext is JVM-global, so a
     // "private" session still shares it), then restores through the same
